@@ -2343,9 +2343,18 @@ def _nsw_shrink(sym: DataFrame, deg: int, keep_dist: bool = False) -> DataFrame:
             F.col("dst").alias("src"), F.col("src").alias("dst"), "dist_q"
         )
     ).distinct()
+    return _nsw_prune(und, deg, keep_dist=keep_dist)
+
+
+def _nsw_prune(edges: DataFrame, deg: int, keep_dist: bool = True) -> DataFrame:
+    """HNSW's neighbor-list truncation: every src keeps its 2*deg
+    nearest (src, dst, dist_q) edges, ties broken by dst — the one
+    degree bound the build, insert and delete folds share.
+    ``keep_dist=False`` drops dist_q from the output."""
+    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
     cols = ["src", "dst", "dist_q"] if keep_dist else ["src", "dst"]
     return (
-        und.withColumn("rn", F.row_number().over(wk))
+        edges.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= 2 * deg)
         .select(*cols)
     )
@@ -2414,12 +2423,7 @@ def nsw_insert(
     merged = adj_scored.select("src", "dst", "dist_q").unionByName(
         links
     ).unionByName(rev)
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
-    return (
-        merged.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 2 * deg)
-        .select("src", "dst", "dist_q")
-    )
+    return _nsw_prune(merged, deg)
 
 
 def nsw_delete(
@@ -2495,12 +2499,7 @@ def nsw_delete(
         )
     )
     merged = kept.select("src", "dst", "dist_q").unionByName(bridge).distinct()
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
-    return (
-        merged.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 2 * deg)
-        .select("src", "dst", "dist_q")
-    )
+    return _nsw_prune(merged, deg)
 
 
 def nsw_descent(emb: DataFrame, adj: DataFrame, deg: int) -> DataFrame:
@@ -2590,11 +2589,11 @@ def nsw_beam(
 ) -> DataFrame:
     """(query_id, node, dist_q): the final beam after ``hops``
     monotone expansion rounds over ``adj`` — the search primitive
-    nsw_search ranks and the HNSW hierarchy chains (layer k's best
-    beam node seeds layer k-1). Seeding: ``entries`` is an explicit
-    per-query (query_id, node) frame (the HNSW descent hand-off);
-    otherwise every query starts at the min vec_id of ``entry_from``
-    (a layer's member frame), defaulting to the whole corpus.
+    nsw_search ranks and hnsw_visit chains (layer 1's best beam node
+    seeds layer 0). Seeding: ``entries`` is an explicit per-query
+    (query_id, node) frame (hnsw_visit's hand-off); otherwise every
+    query starts at the min vec_id of ``entry_from`` (a layer's
+    member frame), defaulting to the whole corpus.
 
     The beam is MONOTONE: every round's candidate set contains the
     previous beam, so the final beam is exactly the best ``beam``
@@ -2692,6 +2691,81 @@ def nsw_beam(
     return score(vis.distinct()) if keep_visited else cur
 
 
+def hnsw_visit(
+    emb: DataFrame,
+    queries: DataFrame,
+    adj0: DataFrame,
+    adj1: DataFrame,
+    l1_members: DataFrame,
+    beam: int = 8,
+    hops: int = 3,
+    keep_visited: bool = False,
+) -> DataFrame:
+    """(query_id, node, dist_q): the two-layer HNSW descent (Malkov &
+    Yashunin 2018) — layer-1 beam from the sparse layer's min-vec_id
+    entry (``l1_members``), per-query hand-off of the best layer-1
+    node found, base-layer beam over ``adj0`` seeded there. Returns
+    the base layer's final beam, or with ``keep_visited=True`` its
+    scored visited set (see nsw_beam).
+
+    The ONE descent every HNSW search shares: hnsw_search ranks it,
+    hnsw_filtered_search ranks its visited set's predicate matches,
+    and the store's radius search (streaming/ann_index.py)
+    thresholds its visited set — so the traversal cannot fork
+    between result rules.
+
+    Scale: both beams touch O(beam * 2*deg * hops) nodes per query
+    independent of corpus size; the hand-off is a 1-row-per-query
+    frame — the hierarchy adds one tiny broadcast join to the
+    serving path."""
+    beam1 = nsw_beam(
+        emb, queries, adj1, beam=beam, hops=hops, entry_from=l1_members
+    )
+    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
+    entries0 = (
+        beam1.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") == 1)
+        .select("query_id", "node")
+    )
+    return nsw_beam(
+        emb,
+        queries,
+        adj0,
+        beam=beam,
+        hops=hops,
+        entries=entries0,
+        keep_visited=keep_visited,
+    )
+
+
+def _rank_topk(
+    cand: DataFrame, k: int, exclude: DataFrame | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, dist_q): a scored (query_id,
+    node, dist_q) candidate frame ranked to its top-``k``.
+
+    ``exclude`` (a vec_id frame) is the tombstone mask of the
+    persisted-index delete lifecycle, applied BEFORE ranking: the
+    beam may traverse THROUGH a tombstoned node (its edges bridge the
+    graph until compaction rewrites them) but a tombstoned id can
+    never be RETURNED, and ranks stay gapless over the survivors. A
+    compacted adjacency contains no deleted nodes, so there the mask
+    is a no-op enforcing the contract. Self-matches are dropped."""
+    if exclude is not None:
+        cand = cand.join(
+            exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
+        )
+    wr = Window.partitionBy("query_id").orderBy("dist_q", "node")
+    return (
+        cand.filter(F.col("node") != F.col("query_id"))
+        .withColumn("rank", F.row_number().over(wr))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
+        )
+    )
+
+
 def hnsw_search(
     emb: DataFrame,
     queries: DataFrame,
@@ -2703,43 +2777,18 @@ def hnsw_search(
     hops: int = 3,
     exclude: DataFrame | None = None,
 ) -> DataFrame:
-    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
-    (Malkov & Yashunin 2018) — layer-1 beam from the sparse layer's
-    min-vec_id entry, per-query hand-off of the best layer-1 node
-    found, base-layer beam seeded there, final top-k. ONE
+    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search —
+    hnsw_visit's final base-layer beam ranked to the top-``k``. ONE
     implementation shared by the build-per-run audit query
     (q_sim_hnsw_topk) and the persisted-index serving path
     (streaming/ann_index.py), so the search rule cannot fork between
     the benchmarked form and the deployed form.
 
-    Scale: both beams touch O(beam * 2*deg * hops) nodes per query
-    independent of corpus size; the hand-off is a 1-row-per-query
-    frame — the hierarchy adds one tiny broadcast join to the
-    serving path.
-
-    ``exclude`` (a vec_id frame) is the tombstone mask: excluded ids
-    are dropped from the final beam BEFORE ranking, so a search
-    served from a store with pending tombstones can never return a
-    deleted vector (see nsw_search)."""
-    beam1 = nsw_beam(
-        emb, queries, adj1, beam=beam, hops=hops, entry_from=l1_members
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    entries0 = (
-        beam1.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "node")
-    )
-    return nsw_search(
-        emb,
-        queries,
-        adj0,
-        k=k,
-        beam=beam,
-        hops=hops,
-        entries=entries0,
-        exclude=exclude,
-    )
+    ``exclude`` is the tombstone mask (see _rank_topk): a search
+    served from a store with pending tombstones never returns a
+    deleted vector."""
+    vis = hnsw_visit(emb, queries, adj0, adj1, l1_members, beam, hops)
+    return _rank_topk(vis, k, exclude)
 
 
 def hnsw_filtered_search(
@@ -2757,54 +2806,26 @@ def hnsw_filtered_search(
     """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
     under a metadata predicate — the filtered-HNSW answer to the
     problem q_ann_filtered_recall's 'post' row prices (a selective
-    filter starves a truncated top-k): the hierarchy descends and the
-    base-layer beam expands EXACTLY as in hnsw_search — traversal
-    runs through non-matching nodes, because they are the graph's
-    bridges — but the result ranks the predicate's matches
-    (``filt_ids``, a vec_id frame) over the search's FULL VISITED SET
-    (nsw_beam keep_visited), not over the width-``beam`` final list.
-    Over-expansion is bounded by the footprint the unfiltered search
-    already pays — O(beam * 2*deg * hops) scored nodes per query —
-    so the filter costs zero extra traversal; widening ``beam`` is
-    the recall knob when selectivity bites (the q_ann_hnsw_beam
-    audit's serving knob).
+    filter starves a truncated top-k): the descent is hnsw_visit,
+    EXACTLY as in hnsw_search — traversal runs through non-matching
+    nodes, because they are the graph's bridges — but the result
+    ranks the predicate's matches (``filt_ids``, a vec_id frame) over
+    the search's FULL VISITED SET (``keep_visited=True``), not over
+    the width-``beam`` final list. Over-expansion is bounded by the
+    footprint the unfiltered search already pays — O(beam * 2*deg *
+    hops) scored nodes per query — so the filter costs zero extra
+    traversal; widening ``beam`` is the recall knob when selectivity
+    bites (the q_ann_hnsw_beam audit's serving knob).
 
     ``exclude`` composes the tombstone mask (delete lifecycle), so a
     store serves filtered searches with pending deletes correctly."""
-    beam1 = nsw_beam(
-        emb, queries, adj1, beam=beam, hops=hops, entry_from=l1_members
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    entries0 = (
-        beam1.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "node")
-    )
-    vis = nsw_beam(
-        emb,
-        queries,
-        adj0,
-        beam=beam,
-        hops=hops,
-        entries=entries0,
-        keep_visited=True,
+    vis = hnsw_visit(
+        emb, queries, adj0, adj1, l1_members, beam, hops, keep_visited=True
     )
     cand = vis.join(
         filt_ids.select(F.col("vec_id").alias("node")), "node", "left_semi"
     )
-    if exclude is not None:
-        cand = cand.join(
-            exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
-        )
-    wr = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    return (
-        cand.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
-        )
-    )
+    return _rank_topk(cand, k, exclude)
 
 
 def nsw_search(
@@ -2814,34 +2835,13 @@ def nsw_search(
     k: int = 3,
     beam: int = 8,
     hops: int = 3,
-    entries: DataFrame | None = None,
     exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, dist_q): greedy beam search over
-    an nsw_graph adjacency — nsw_beam ranked to the final top-``k``
-    (self-matches excluded). See nsw_beam for the seeding, monotone-
-    beam, and scale properties.
-
-    ``exclude`` (a vec_id frame) drops excluded ids from the final
-    beam BEFORE ranking — the tombstone mask of the persisted-index
-    delete lifecycle: the beam may traverse THROUGH a tombstoned node
-    (its edges bridge the graph until compaction rewrites them) but a
-    tombstoned id can never be RETURNED, and ranks stay gapless over
-    the survivors. A compacted adjacency contains no deleted nodes,
-    so there the mask is a no-op enforcing the contract."""
-    cur = nsw_beam(
-        emb, queries, adj, beam=beam, hops=hops, entries=entries
-    )
-    if exclude is not None:
-        cur = cur.join(
-            exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
-        )
-    wr = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    return (
-        cur.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
-        )
+    an nsw_graph adjacency from the corpus' min vec_id — nsw_beam
+    ranked to the final top-``k`` (self-matches and ``exclude``d ids
+    dropped, see _rank_topk). See nsw_beam for the seeding,
+    monotone-beam, and scale properties."""
+    return _rank_topk(
+        nsw_beam(emb, queries, adj, beam=beam, hops=hops), k, exclude
     )

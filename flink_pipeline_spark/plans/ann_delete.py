@@ -48,15 +48,17 @@ from ..operators.llm import (
 from .llm_ops import (
     EMBED_MULTI_MAX_CELL,
     EMBED_PAIR_NPROBE,
-    HNSW_L1_MOD,
     IVF_SEED_CENTROIDS,
     NSW_BEAM,
     NSW_DEG,
     NSW_HOPS,
     PQ_QUERY_MAX,
     _DISTQ_DUCK,
+    _HNSW_L1V_SQL,
     _NSW_DISTQM,
     _NSW_QS_ENTRY_SQL,
+    _hnsw_descent_sql,
+    _hnsw_uentry_sql,
     _nsw_beam_sql,
     _nsw_graph_sql_for,
 )
@@ -500,36 +502,13 @@ def _hnsw_delete_ctes(dels_sql: str) -> str:
     base graph (final CTE ``bb{hops}``). Factored out of the full
     oracle (r13) so the unindex recall audit can compose the same
     beams with its own truth/rollup tail."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    uentry = """uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-        WHERE vec_id NOT IN (SELECT vec_id FROM dels)
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ab{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
+    live = " WHERE vec_id NOT IN (SELECT vec_id FROM dels)"
     return (
-        f"""{l1}, {_nsw_graph_sql_for("l1v", "u", keep_dist=True)},
+        f"""{_HNSW_L1V_SQL}, {_nsw_graph_sql_for("l1v", "u", keep_dist=True)},
     {_nsw_graph_sql_for("embeddings", "z", keep_dist=True)}, {dels_sql},
     {_nsw_delete_sql("uadj", "du")}, {_nsw_delete_sql("zadj", "dz")},
-    {_NSW_QS_ENTRY_SQL}, {uentry}, """
-        + _nsw_beam_sql("dudadj", "a", b0=b0_l1)
-        + f", {hand_off}, "
-        + _nsw_beam_sql("dzdadj", "b", b0=b0_base)
+    {_NSW_QS_ENTRY_SQL}, {_hnsw_uentry_sql(live)}, """
+        + _hnsw_descent_sql("dudadj", "a", "dzdadj", "b")
     )
 
 

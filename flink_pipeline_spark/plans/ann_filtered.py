@@ -22,19 +22,20 @@ from pyspark.sql import functions as F
 
 from ..caching import literal_frame, parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56_sql_duckdb, round_agg, round_sql
+from ..functions.portable import round_agg, round_sql
 from ..operators.llm import topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
     FILT_LABEL,
-    HNSW_L1_MOD,
     IVF_SEED_CENTROIDS,
     NSW_HOPS,
     _COS_DUCK,
+    _HNSW_L1V_SQL,
     _IVF_PROBES_DUCK,
     _NSW_DISTQM,
     _SEED_ASSIGN_DUCK,
+    _hnsw_descent_sql,
+    _hnsw_uentry_sql,
     _ivf_topk_select_duck,
-    _nsw_beam_sql,
     _nsw_graph_sql_for,
     hnsw_store_for,
     q_sim_filtered_topk,
@@ -75,32 +76,11 @@ def _hnsw_filtered_with() -> str:
     hand-off, the base-layer beam with visited collection, and the
     predicate-masked final ranking ``gfinal`` — all composed from the
     shared builders, parameterized on the filtered query set."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ub{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM fqs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM fqs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
     return (
-        f"""{l1}, {_nsw_graph_sql_for("l1v", "u")},
-    {_nsw_graph_sql_for("embeddings", "z")}, {_FQS_SQL}, uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), """
-        + _nsw_beam_sql("uadj", "u", b0=b0_l1, qs="fqs")
-        + f", {hand_off}, "
-        + _nsw_beam_sql("zadj", "z", b0=b0_base, qs="fqs")
+        f"""{_HNSW_L1V_SQL}, {_nsw_graph_sql_for("l1v", "u")},
+    {_nsw_graph_sql_for("embeddings", "z")}, {_FQS_SQL},
+    {_hnsw_uentry_sql()}, """
+        + _hnsw_descent_sql("uadj", "u", "zadj", "z", qs="fqs")
         + f""", {_visited_sql("z", "fqs")}, gfinal AS (
         SELECT query_id, node AS neighbor_id, rank, dist_q FROM (
             SELECT query_id, node, dist_q,

@@ -2736,44 +2736,73 @@ q_sim_nsw_descent = _register_nsw_descent()
 HNSW_L1_MOD = 8  # layer-1 keeps vec_ids with hash56 % 8 == 0 (~1/8)
 
 
+# the sparse upper layer's vector CTE (HNSW's geometric level
+# assignment, one level deep) — every two-layer oracle opens with it
+_HNSW_L1V_SQL = f"""l1v AS (
+        SELECT vec_id, embedding FROM embeddings
+        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
+    )"""
+
+
+def _hnsw_uentry_sql(where: str = "") -> str:
+    """``uentry``: the layer-1 entry node, the minimum ``l1v`` member
+    — ``where`` restricts the candidates (the delete unroll enters at
+    the minimum SURVIVING member)."""
+    return f"""uentry AS (
+        SELECT min(vec_id) AS node FROM l1v{where}
+    )"""
+
+
+def _hnsw_descent_sql(
+    adj1: str,
+    p1: str,
+    adj0: str,
+    p0: str,
+    hand: str = "e0",
+    qs: str = "qs",
+    beam: int = NSW_BEAM,
+) -> str:
+    """The two-layer descent CTE text — operators hnsw_visit's oracle
+    twin and the ONE copy every HNSW oracle composes: the layer-1
+    beam over ``adj1`` (names prefixed ``p1``) from ``uentry``, the
+    per-query hand-off CTE ``hand`` (the best layer-1 node found),
+    and the base-layer beam over ``adj0`` (prefix ``p0``, final CTE
+    ``{p0}b{hops}``) seeded there. ``qs`` names the query-set CTE;
+    ``beam`` is the width of both beams."""
+    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
+        FROM {qs} q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
+    hand_off = f"""{hand} AS (
+        SELECT query_id, node FROM (
+            SELECT query_id, node,
+                   row_number() OVER (
+                       PARTITION BY query_id
+                       ORDER BY dist_q, node) AS rn
+            FROM {p1}b{NSW_HOPS}
+        ) t WHERE rn = 1
+    )"""
+    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
+        FROM {qs} q JOIN {hand} e ON e.query_id = q.query_id
+        JOIN embeddings m ON m.vec_id = e.node"""
+    return (
+        _nsw_beam_sql(adj1, p1, b0=b0_l1, qs=qs, beam=beam)
+        + f", {hand_off}, "
+        + _nsw_beam_sql(adj0, p0, b0=b0_base, qs=qs, beam=beam)
+    )
+
+
 def _hnsw_oracle_sql() -> str:
-    """The full two-layer HNSW unroll: both layer graphs, both beam
-    unrolls, the per-query hand-off, the final ranking — all composed
+    """The full two-layer HNSW unroll: both layer graphs, the shared
+    descent (_hnsw_descent_sql), the final ranking — all composed
     from the shared text builders. ONE oracle text shared by the
     build-per-run audit query (q_sim_hnsw_topk) and the persisted-
     index serving query (q_sim_hnsw_search): the store is the
     deterministic build's output persisted, so the served answer must
     equal the built-fresh answer — sharing the text makes that
     contract literal."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ub{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
     return (
         f"""
-    WITH {l1}, {_nsw_graph_sql_for("l1v", "u")}, {_nsw_graph_sql_for("embeddings", "z")}, {_NSW_QS_ENTRY_SQL}, uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), """
-        + _nsw_beam_sql(
-            "uadj",
-            "u",
-            b0=f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node""",
-        )
-        + f", {hand_off}, "
-        + _nsw_beam_sql("zadj", "z", b0=b0_base)
+    WITH {_HNSW_L1V_SQL}, {_nsw_graph_sql_for("l1v", "u")}, {_nsw_graph_sql_for("embeddings", "z")}, {_NSW_QS_ENTRY_SQL}, {_hnsw_uentry_sql()}, """
+        + _hnsw_descent_sql("uadj", "u", "zadj", "z")
         + _nsw_final_sql(f"zb{NSW_HOPS}")
     )
 
@@ -3642,16 +3671,11 @@ def _register_hnsw_beam_audit() -> None:
     recall-vs-cost curve of the SERVING knob, measured the way the
     per-method rows priced the hash families. Graphs are built once;
     only the two beam widths vary per row."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
     head = (
-        f"\n    WITH {l1}, {_nsw_graph_sql_for('l1v', 'u')}, "
+        f"\n    WITH {_HNSW_L1V_SQL}, {_nsw_graph_sql_for('l1v', 'u')}, "
         f"{_nsw_graph_sql_for('embeddings', 'z')}, {_NSW_QS_ENTRY_SQL}, "
-        """uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), exact_l2 AS MATERIALIZED ("""
+        f"{_hnsw_uentry_sql()}, "
+        """exact_l2 AS MATERIALIZED ("""
         + _EXACT_L2_TRUTH_SQL
         + """
     ), td AS MATERIALIZED (
@@ -3662,23 +3686,10 @@ def _register_hnsw_beam_audit() -> None:
     parts = [head]
     rows = []
     for b in HNSW_BEAMS:
-        up, zp = f"u{b}", f"z{b}"
-        b0_u = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-        parts.append(_nsw_beam_sql("uadj", up, b0=b0_u, beam=b))
-        parts.append(f"""e{b} AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM {up}b{NSW_HOPS}
-        ) t WHERE rn = 1
-    )""")
-        b0_z = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e{b} e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
-        parts.append(_nsw_beam_sql("zadj", zp, b0=b0_z, beam=b))
+        zp = f"z{b}"
+        parts.append(
+            _hnsw_descent_sql("uadj", f"u{b}", "zadj", zp, f"e{b}", beam=b)
+        )
         parts.append(f"""res{b} AS (
         SELECT query_id, neighbor_id FROM (
             SELECT query_id, node AS neighbor_id,
@@ -5065,17 +5076,6 @@ def _register_langid_ngram() -> None:
         (bucket, class) cells. Nothing shuffles wider than the
         per-doc-class score table, which any per-class scorer needs."""
         d = load_table(spark, sf_dir, "documents")
-        # r15 restructure (guide §1.2 per-task work): the md5 bucket
-        # hash is a pure function of the TRIGRAM, so hash each
-        # DISTINCT trigram once and broadcast-join the buckets back —
-        # 1.47M per-position md5+conv evaluations collapse to |trigram
-        # vocabulary| (377 at sf0.1; bounded by charset^3 — a
-        # type-table, the same convention as the vocab-sized LM
-        # tables). fan_out widens the one-file corpus scan so the
-        # position explode doesn't run single-task; materialize fills
-        # the cache once instead of letting the fit/score branches
-        # race it. Bucket values are bit-identical (same md5 text on
-        # the same string); the oracle still hashes per occurrence.
         # pre-aggregate per (doc, class, bucket) BEFORE caching (r15,
         # guide §2.3 "aggregate before you shuffle" + §5 cache sizing):
         # the raw per-position frame is ~len(text) rows per doc, and

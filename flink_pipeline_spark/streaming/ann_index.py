@@ -54,10 +54,17 @@ compact (drop dead lists, bridge-repair + re-prune touched
 survivors), tombstones append to the log — then arrivals fold into
 the COMPACTED graphs, beaming over the surviving corpus only. A
 frame without ``op`` is all arrivals (the pre-delete API,
-unchanged). Searches exclude tombstoned ids from the final beam
-(operators/llm.nsw_search's mask — on a compacted adjacency a
-no-op enforcing the contract) and read vectors through the
-tombstone mask, so a deleted vector can never be served.
+unchanged). Searches exclude tombstoned ids from their results
+(operators/llm's ranking mask — on a compacted adjacency a no-op
+enforcing the contract) and read vectors through the tombstone mask
+(``_snapshot``, the one store read), so a deleted vector can never
+be served.
+
+Search rule (operators/llm.hnsw_visit — the ONE two-layer descent
+every serving path shares): ``search`` ranks its final beam
+(hnsw_search), ``search_filtered`` ranks the predicate's matches in
+its visited set (hnsw_filtered_search), ``search_radius`` thresholds
+its visited set. The traversal cannot fork between result rules.
 """
 
 from __future__ import annotations
@@ -71,11 +78,17 @@ from ..functions.portable import hash56
 from ..operators.llm import (
     hnsw_filtered_search,
     hnsw_search,
+    hnsw_visit,
     nsw_delete,
     nsw_graph,
     nsw_insert,
 )
-from .heavy import partition_ids, prune_partitions, split_ops
+from .heavy import (
+    partition_ids,
+    prior_partitions,
+    prune_partitions,
+    split_ops,
+)
 
 _ADJ_SCHEMA = "layer INT, src BIGINT, dst BIGINT, dist_q BIGINT"
 
@@ -156,16 +169,13 @@ class ANNIndexMonitor:
         """Every indexed vector from partitions strictly BEFORE
         ``batch_id`` — the append-only log read that keeps a replayed
         batch from seeing its own or later arrivals."""
-        bids = partition_ids(spark, self._path("vecs"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = prior_partitions(spark, self._path("vecs"), batch_id)
+        if not parts:
+            bids = partition_ids(spark, self._path("vecs"))
             raise ValueError(
                 f"ann index: no vector partitions before batch "
                 f"{batch_id} (have {sorted(bids)}; call init first)"
             )
-        parts = [
-            os.path.join(self._path("vecs"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.parquet(*parts).select("vec_id", "embedding")
 
     def _read_tombs(self, spark, batch_id: int) -> DataFrame:
@@ -173,24 +183,33 @@ class ANNIndexMonitor:
         ``batch_id``. Unlike adj/vecs, an absent tombstone log is a
         VALID state (no delete has ever run), not an error — it reads
         as the empty mask."""
-        bids = partition_ids(spark, self._path("tombs"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = prior_partitions(spark, self._path("tombs"), batch_id)
+        if not parts:
             return spark.createDataFrame([], "vec_id BIGINT")
-        parts = [
-            os.path.join(self._path("tombs"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.schema("vec_id BIGINT").parquet(*parts)
+
+    def _snapshot(self, spark, before: int):
+        """(vecs, adj0, adj1, tombs): the store as of strictly BEFORE
+        batch ``before`` — the vector log read through the tombstone
+        mask, the layer-0 and layer-1 scored adjacencies
+        (src, dst, dist_q), and the tombstone set. The one read the
+        fold and every serving path share."""
+        adj = self._read_adj(spark, before)
+        tombs = self._read_tombs(spark, before)
+        vecs = self._read_vecs(spark, before).join(
+            tombs, "vec_id", "left_anti"
+        )
+
+        def layer(n: int) -> DataFrame:
+            return adj.filter(F.col("layer") == n).drop("layer")
+
+        return vecs, layer(0), layer(1), tombs
 
     # -- the foreachBatch fold ----------------------------------------
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        adj = self._read_adj(spark, batch_id)
-        tombs = self._read_tombs(spark, batch_id)
-        vecs = self._read_vecs(spark, batch_id).join(
-            tombs, "vec_id", "left_anti"
-        )
+        vecs, adj0, adj1, tombs = self._snapshot(spark, batch_id)
         dels, arrivals = split_ops(batch)
         # re-inserting a previously tombstoned vec_id is UNSUPPORTED
         # (the id is dead forever — _read_tombs masks it on every
@@ -212,8 +231,6 @@ class ANNIndexMonitor:
                 "vec_id(s) — unsupported (tombstoned ids are dead "
                 "forever; index under a fresh vec_id instead)"
             )
-        adj0 = adj.filter(F.col("layer") == 0).drop("layer")
-        adj1 = adj.filter(F.col("layer") == 1).drop("layer")
         # deletes FIRST: compact both layers, then arrivals beam over
         # the compacted graphs and the surviving corpus
         adj0 = nsw_delete(vecs, adj0, dels, deg=self.deg)
@@ -261,16 +278,12 @@ class ANNIndexMonitor:
         Vectors are read through the tombstone mask and tombstoned
         ids are excluded from the final beam, so a deleted vector is
         never served."""
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        vecs, adj0, adj1, tombs = self._snapshot(spark, after_batch_id + 1)
         return hnsw_search(
             vecs,
             queries,
-            adj.filter(F.col("layer") == 0).select("src", "dst"),
-            adj.filter(F.col("layer") == 1).select("src", "dst"),
+            adj0,
+            adj1,
             l1_members=vecs.filter(self._is_l1()),
             k=k,
             beam=self.beam,
@@ -288,45 +301,17 @@ class ANNIndexMonitor:
         """(query_id, neighbor_id, dist_q): RADIUS search served from
         the store — every node the standard two-layer search VISITS
         that lies within quantized squared L2 ``radius_q`` of the
-        query. The beam traversal is byte-identical to ``search``
-        (same descent, same hand-off, same footprint); only the
-        result rule changes: instead of truncating the final beam to
-        k, the full visited set (which the search already paid to
-        score — the hnsw_filtered_search insight) is thresholded.
-        Recall is bounded by what the beam visits (widen the beam to
-        raise it); tombstoned ids are excluded as in ``search``."""
-        from ..operators.llm import nsw_beam
-
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
-        adj0 = adj.filter(F.col("layer") == 0).select("src", "dst")
-        adj1 = adj.filter(F.col("layer") == 1).select("src", "dst")
-        beam1 = nsw_beam(
-            vecs,
-            queries,
-            adj1,
-            beam=self.beam,
-            hops=self.hops,
-            entry_from=vecs.filter(self._is_l1()),
-        )
-        from pyspark.sql.window import Window
-
-        wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-        entries0 = (
-            beam1.withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "node")
-        )
-        vis = nsw_beam(
-            vecs,
-            queries,
-            adj0,
-            beam=self.beam,
-            hops=self.hops,
-            entries=entries0,
+        query. The traversal is ``search``'s hnsw_visit (same
+        descent, same hand-off, same footprint); only the result rule
+        changes: instead of truncating the final beam to k, the full
+        visited set (which the search already paid to score — the
+        hnsw_filtered_search insight) is thresholded. Recall is
+        bounded by what the beam visits (widen the beam to raise it);
+        tombstoned ids are excluded as in ``search``."""
+        vecs, adj0, adj1, tombs = self._snapshot(spark, after_batch_id + 1)
+        l1 = vecs.filter(self._is_l1())
+        vis = hnsw_visit(
+            vecs, queries, adj0, adj1, l1, self.beam, self.hops,
             keep_visited=True,
         )
         return (
@@ -359,16 +344,12 @@ class ANNIndexMonitor:
         store itself holds only vectors, so the predicate arrives as
         an id set, the vector-store filter-pushdown convention).
         Tombstones are excluded as in ``search``."""
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        vecs, adj0, adj1, tombs = self._snapshot(spark, after_batch_id + 1)
         return hnsw_filtered_search(
             vecs,
             queries,
-            adj.filter(F.col("layer") == 0).select("src", "dst"),
-            adj.filter(F.col("layer") == 1).select("src", "dst"),
+            adj0,
+            adj1,
             l1_members=vecs.filter(self._is_l1()),
             filt_ids=filt_ids,
             k=k,

@@ -162,6 +162,7 @@ def _search_rows(mon, spark, queries, after):
     )
 
 
+@pytest.mark.slow
 def test_ann_index_stream_equals_batch(spark, tmp_path):
     """Feeding the arrival slice through the foreachBatch insert sink
     in three micro-batches (split by vec_id mod 3) yields the same
@@ -224,6 +225,7 @@ def test_ann_index_stream_equals_batch(spark, tmp_path):
     assert got_search == want_search and got_search
 
 
+@pytest.mark.slow
 def test_ann_index_crash_replay_idempotent(spark, tmp_path):
     """A replayed micro-batch re-reads strictly-before state and
     re-derives the identical adjacency snapshot and vector log
@@ -242,6 +244,7 @@ def test_ann_index_crash_replay_idempotent(spark, tmp_path):
     assert _search_rows(mon, spark, queries, 1) == search_after
 
 
+@pytest.mark.slow
 def test_ann_index_guards(spark, tmp_path):
     """Uninitialized store raises on insert AND search; reading
     pruned adjacency history raises; the vector log is never pruned."""
@@ -266,6 +269,7 @@ def test_ann_index_guards(spark, tmp_path):
     assert sorted(partition_ids(spark, mon._path("vecs"))) == [-1, 0, 1, 2]
 
 
+@pytest.mark.slow
 def test_hnsw_store_serves_without_rebuilding(spark):
     """Second call of the serving query must READ the published
     store, not rebuild it: the store's adjacency file mtimes are
@@ -297,6 +301,35 @@ def test_hnsw_store_serves_without_rebuilding(spark):
     assert stamp == stamp2, "serving query rebuilt a published store"
     want = sorted(map(tuple, q_sim_hnsw_topk(spark, SMALL_SF).collect()))
     assert first == second == want and first
+
+
+def test_radius_search_under_deletes(spark, tmp_path):
+    """search_radius on a store with tombstones: it never returns a
+    tombstoned id, and with a radius above every distance its
+    neighbours contain search's top-k for every query — both read the
+    same hnsw_visit traversal, radius thresholding its visited set and
+    search ranking its final beam."""
+    emb = load_table(spark, SMALL_SF, "embeddings")
+    seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
+    small = emb.filter(F.col("vec_id") < 64).select("vec_id", "embedding")
+    queries = small.filter(F.col("vec_id") < PQ_QUERY_MAX)
+    dels = small.filter(
+        (F.col("vec_id") % 4 == 1) & (F.col("vec_id") >= PQ_QUERY_MAX)
+    )
+    dead = {r.vec_id for r in dels.select("vec_id").collect()}
+    assert dead
+
+    mon = _mon(tmp_path)
+    mon.init(small, seeds)
+    mon(dels.select("vec_id", "embedding", F.lit("delete").alias("op")), 0)
+
+    radius = mon.search_radius(spark, queries, 0, radius_q=1 << 62).collect()
+    topk = mon.search(spark, queries, 0).collect()
+    assert radius and topk
+    assert not {r.neighbor_id for r in radius} & dead
+    within = {(r.query_id, r.neighbor_id, r.dist_q) for r in radius}
+    assert {(r.query_id, r.neighbor_id, r.dist_q) for r in topk} <= within
+    assert {r.query_id for r in topk} == set(range(PQ_QUERY_MAX))
 
 
 # ---------------------------------------------------------------------------
