@@ -27,7 +27,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.portable import round_agg
 from ..operators.multimodal import AFP_WINDOWS, audio_fp_bands, pcm_stream
 from .image_dedup import (
     MAX_HAMMING,
@@ -36,6 +35,7 @@ from .image_dedup import (
     _RECALL_HITS,
     _RECALL_ROW,
 )
+from .recall import pair_audit
 from .registry import register
 
 AFP_DIR = os.path.abspath(
@@ -233,25 +233,7 @@ def q_dedup_audio_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
     method = q_dedup_audio_fp(spark, sf_dir)
-    h = method.select("file_a", "file_b").join(
-        truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-    ).agg(
-        F.count("*").cast("long").alias("n_method"),
-        F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-    )
-    prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-        round_agg(F.col("hits").cast("double") / F.col("n_method"))
-    )
-    return h.crossJoin(F.broadcast(denom)).select(
-        F.lit("afp").alias("method"),
-        F.col("n_truth"),
-        "n_method",
-        "hits",
-        round_agg(
-            F.col("hits").cast("double") / F.col("n_truth")
-        ).alias("recall"),
-        prec.alias("prec"),
-    )
+    return pair_audit(method, truth, denom, ("file_a", "file_b"), "afp")
 
 
 q_dedup_audio_fp_recall.__doc__ = q_dedup_audio_fp_recall.__doc__.format(

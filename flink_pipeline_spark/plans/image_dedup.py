@@ -25,8 +25,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.portable import round_agg, round_sql
+from ..functions.portable import round_sql
 from ..operators.multimodal import ahash_bands, dhash_bands, gray_pixels
+from .recall import pair_audit
 from .registry import register
 
 PHASH_DIR = os.path.abspath(
@@ -350,25 +351,7 @@ def q_dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
 
     def audit(method: DataFrame, name: str) -> DataFrame:
-        h = method.select("file_a", "file_b").join(
-            truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-        ).agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-        )
-        prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-            round_agg(F.col("hits").cast("double") / F.col("n_method"))
-        )
-        return h.crossJoin(F.broadcast(denom)).select(
-            F.lit(name).alias("method"),
-            F.col("n_truth"),
-            "n_method",
-            "hits",
-            round_agg(
-                F.col("hits").cast("double") / F.col("n_truth")
-            ).alias("recall"),
-            prec.alias("prec"),
-        )
+        return pair_audit(method, truth, denom, ("file_a", "file_b"), name)
 
     return audit(q_dedup_image_phash(spark, sf_dir), "ahash").unionByName(
         audit(q_dedup_image_dhash(spark, sf_dir), "dhash")

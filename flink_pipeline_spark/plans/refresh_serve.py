@@ -62,9 +62,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame
 from ..catalog import load_table
-from ..functions.portable import round_agg, round_sql
 from ..operators.llm import topk_neighbors_l2
 from .index_refresh import (
     _DRIFT_EXPR,
@@ -86,6 +84,7 @@ from .llm_ops import (
 )
 from .pq_serve import PQ_INDEX_CACHE, _pq_monitor, _pq_store_key
 from .profiling import EDRIFT_RAW_Q
+from .recall import recall_rollup, rollup_sql
 from .registry import ORACLES, register
 
 # the arrival slice the compressed refresh RE-CODES through the
@@ -243,27 +242,7 @@ def _pq_refresh_recall_oracle() -> str:
             FROM drifted q JOIN drifted e ON e.vec_id <> q.vec_id
             WHERE q.vec_id < {PQ_QUERY_MAX}
         ) t WHERE rank <= 3
-    ), m AS (
-        SELECT 'served' AS method, query_id, neighbor_id FROM served
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'served']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {rollup_sql({'served': 'served'})}
     """
 
 
@@ -298,38 +277,7 @@ def q_pq_refresh_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    m = served.withColumn("method", F.lit("served")).unionByName(
-        truth.withColumn("method", F.lit("exact"))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark, [("exact",), ("served",)], "method STRING")
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-        )
-    )
+    return recall_rollup(spark, truth, {"served": served})
 
 
 def ann_refresh_store_for(spark: SparkSession, sf_dir: str):

@@ -429,6 +429,8 @@ def q_dedup_unindex_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the store-served search and the drop-set/exact-truth chain are
     # independent — overlap them on driver threads (guide §2.6)
     served, (drops, truth) = parallel_frames(_served_chain, _truth_chain)
+    # the plans/recall.py rollup plus n_dropped_served, a second
+    # aggregate over a join to the drop set — hence its own tail
     m = served.withColumn("method", F.lit("served")).unionByName(
         truth.withColumn("method", F.lit("exact"))
     )

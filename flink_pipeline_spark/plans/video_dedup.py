@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.portable import round_agg, round_sql
 from ..operators.multimodal import VID_KEY_STRIDE, dhash_bands, video_keyframes
+from .recall import pair_audit
 from .registry import register
 
 VIDEO_DIR = os.path.abspath(
@@ -410,24 +411,9 @@ def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    h = method.join(
-        truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-    ).agg(
-        F.count("*").cast("long").alias("n_method"),
-        F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-    )
-    prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-        round_agg(F.col("hits").cast("double") / F.col("n_method"))
-    )
-    return h.crossJoin(F.broadcast(denom)).select(
-        "n_truth",
-        "n_method",
-        "hits",
-        round_agg(F.col("hits").cast("double") / F.col("n_truth")).alias(
-            "recall"
-        ),
-        prec.alias("prec"),
-    )
+    return pair_audit(
+        method, truth, denom, ("file_a", "file_b"), "vfp"
+    ).drop("method")
 
 
 q_dedup_video_fp_recall.__doc__ = q_dedup_video_fp_recall.__doc__.format(

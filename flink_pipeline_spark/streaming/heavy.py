@@ -68,14 +68,52 @@ def partition_ids(spark, path: str) -> list[int]:
 
 def prior_partitions(spark, path: str, batch_id: int) -> list[str]:
     """Paths of the ``batch_id=B`` partitions under ``path`` with
-    B < ``batch_id`` — the append-only log read that keeps a replayed
-    batch from seeing its own or later partitions. [] when none
-    exist; whether that is an error is the caller's contract."""
+    B < ``batch_id``, oldest first — the append-only log read that
+    keeps a replayed batch from seeing its own or later partitions.
+    [] when none exist; whether that is an error is the caller's
+    contract."""
     return [
         os.path.join(path, f"batch_id={b}")
-        for b in partition_ids(spark, path)
+        for b in sorted(partition_ids(spark, path))
         if b < batch_id
     ]
+
+
+def read_latest(
+    spark, path: str, schema: str, batch_id: int, label: str
+) -> DataFrame:
+    """The newest ``batch_id=B`` snapshot under ``path`` with
+    B < ``batch_id`` — the one snapshot read every summary monitor
+    shares (the summary is a snapshot, not an append-only log). A
+    missing or empty store maps to an empty ``schema`` frame; a store
+    whose surviving partitions are ALL >= ``batch_id`` raises a
+    ValueError prefixed ``label``: pruning keeps only the latest and
+    one prior snapshot, so the requested history no longer exists, and
+    an empty frame would silently misreport it as "nothing seen yet".
+    Batch 0 nuance: a replayed batch 0 legitimately has no prior
+    snapshot, and a non-empty store would trip the raise — safe
+    because Structured Streaming never replays batch 0 after batch 1
+    commits (the checkpoint advances only on commit), so surviving
+    partitions at batch 0 can only mean the store dir is being REUSED
+    by a new stream, which gets its own distinct error. The partition
+    is selected by a driver-side FS listing (no historical-partition
+    scan) and read directly, so a monitor never races its own prune;
+    EXTERNAL concurrent readers listing the store root must tolerate
+    pruned partitions (set spark.sql.files.ignoreMissingFiles for
+    monitor reads)."""
+    parts = prior_partitions(spark, path, batch_id)
+    if parts:
+        return spark.read.schema(schema).parquet(parts[-1])
+    bids = sorted(partition_ids(spark, path))
+    if not bids:
+        return spark.createDataFrame([], schema)
+    hint = (
+        "store already populated at batch 0 — a new "
+        "stream must start from a fresh store dir"
+        if batch_id == 0
+        else f"no snapshot before batch {batch_id} survives pruning"
+    )
+    raise ValueError(f"{label}: {hint} (have {bids})")
 
 
 def prune_partitions(spark, path: str, keep_from: int) -> None:
@@ -181,39 +219,7 @@ class HeavyHitterMonitor:
     def _read_latest(
         self, spark, kind: str, schema: str, batch_id: int
     ) -> DataFrame:
-        """The newest partition strictly BEFORE ``batch_id`` (the
-        summary is a snapshot, not an append-only log). A missing or
-        empty store maps to empty; a store whose surviving partitions
-        are ALL >= ``batch_id`` raises — pruning keeps only the latest
-        and one prior snapshot, so the requested history no longer
-        exists, and an empty frame would silently misreport it as
-        "nothing seen yet" (ADVICE r9). Batch 0 nuance (ADVICE r10):
-        a replayed batch 0 legitimately has no prior snapshot, and a
-        non-empty store would trip the raise — safe because Structured
-        Streaming never replays batch 0 after batch 1 commits (the
-        checkpoint advances only on commit), so surviving partitions
-        at batch 0 can only mean the store dir is being REUSED by a
-        new stream, which gets its own distinct error. The partition
-        is selected by a driver-side FS listing (no historical-
-        partition scan) and read directly, so this method never races
-        its own prune; EXTERNAL concurrent readers listing the store
-        root must tolerate pruned partitions (set
-        spark.sql.files.ignoreMissingFiles for monitor reads)."""
-        bids = partition_ids(spark, self._path(kind))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            if bids:
-                hint = (
-                    "store already populated at batch 0 — a new "
-                    "stream must start from a fresh store dir"
-                    if batch_id == 0
-                    else f"no snapshot before batch {batch_id} "
-                    "survives pruning"
-                )
-                raise ValueError(f"{kind}: {hint} (have {sorted(bids)})")
-            return spark.createDataFrame([], schema)
-        part = os.path.join(self._path(kind), f"batch_id={max(prior)}")
-        return spark.read.schema(schema).parquet(part)
+        return read_latest(spark, self._path(kind), schema, batch_id, kind)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession

@@ -603,17 +603,39 @@ def test_streaming_cm_replay_idempotent(spark, tmp_path):
     assert first == second
 
 
-def test_streaming_cm_store_reuse_raises(spark, tmp_path):
-    """A new stream pointed at a populated store loud-fails at batch 0
-    instead of silently double-counting (the heavy.py contract)."""
+def _summary_monitor(spark, name, store):
+    """(monitor, batch) for one of the four summary monitors that read
+    their store through streaming/heavy.read_latest."""
     from flink_pipeline_spark.streaming.cm import CMMonitor
+    from flink_pipeline_spark.streaming.heavy import HeavyHitterMonitor
+    from flink_pipeline_spark.streaming.kmv import KMVMonitor
+    from flink_pipeline_spark.streaming.quantile import QuantileMonitor
 
-    d = spark.read.parquet(SMALL_SF + "/documents.parquet")
-    mon = CMMonitor(str(tmp_path / "store"))
-    mon(d.limit(5), 0)
-    mon(d.limit(5), 1)
+    docs = spark.read.parquet(SMALL_SF + "/documents.parquet").limit(5)
+    lineitem = load_table(spark, SMALL_SF, "lineitem").limit(5)
+    return {
+        "heavy": (HeavyHitterMonitor(store, k=3, key_col="source"), docs),
+        "cm": (CMMonitor(store), docs),
+        "kmv": (KMVMonitor(store), docs),
+        "quantile": (QuantileMonitor(store), lineitem),
+    }[name]
+
+
+@pytest.mark.parametrize("name", ["heavy", "cm", "kmv", "quantile"])
+def test_streaming_cm_store_reuse_raises(spark, tmp_path, name):
+    """A new stream pointed at a populated store loud-fails at batch 0
+    instead of silently double-counting, and a replay whose prior
+    snapshot was pruned loud-fails instead of reading an empty summary
+    (the streaming/heavy.read_latest contract, for every summary
+    monitor)."""
+    mon, batch = _summary_monitor(spark, name, str(tmp_path / "store"))
+    mon(batch, 0)
+    mon(batch, 1)
     with pytest.raises(ValueError, match="already populated"):
-        mon(d.limit(5), 0)
+        mon(batch, 0)
+    mon(batch, 2)  # prunes batch 0: only batches 1 and 2 survive
+    with pytest.raises(ValueError, match="no snapshot before batch 1"):
+        mon(batch, 1)
 
 
 def test_filtered_ann_pre_beats_post_and_pushes_filter(spark):
